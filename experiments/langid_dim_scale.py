@@ -3,12 +3,17 @@ measurement leg) and the curation langid stage-parquet footprint
 (ask #7).
 
 Part 1 -- trainer wall vs DIM: per-iteration wall of the vector-shaped
-wide trainer (operators/langid_wide.py) at DIM in {16, 256, 1024,
-4096} on sf0.01, split into the one-time feature pass (Arrow md5 scan,
-DIM-independent except the counts array) and the per-iteration
-gradient pass (numpy int64 matmul + partial-sum collect, whose model
-traffic is |langs| x (DIM+1) ints per partition). The narrow JVM
-trainer at DIM=16 is measured alongside as the baseline.
+trainer (operators/langid_union.py with word_ngrams=(), the
+``langid_scores_wide`` configuration) at DIM in {16, 256, 1024, 4096}
+on sf0.01, split into the one-time feature pass (Arrow md5 scan) and
+the per-iteration gradient pass (numpy int64 reduceat/scatter +
+partial-sum collect, whose model traffic is at most |langs| x (DIM+1)
+ints per partition). The narrow JVM trainer at DIM=16 is measured
+alongside as the baseline.
+
+The committed JSON was recorded with an earlier dense trainer (one
+array<bigint> of length DIM+1 per doc, int64 matmuls); it followed the
+same trajectory, but its timings differ from the sparse trainer's.
 
 Part 2 -- stage parquet size: the composed curation run materializes
 the langid stage as the full scores relation. Write langid_scores to
@@ -44,7 +49,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from map_reduce_framework_spark.operators import langid, langid_wide
+    from map_reduce_framework_spark.operators import langid, langid_union
 
     sf01 = "/root/testdata/sf0.01"
     docs = spark.read.parquet(f"{sf01}/documents.parquet")
@@ -54,7 +59,7 @@ def main() -> None:
 
     # Arrow/Python-worker warmup so the first measured feature pass
     # doesn't carry daemon-fork + JIT cost (the bench.py discipline).
-    langid_wide.wide_features(docs, dim=8).count()
+    langid_union.union_features(docs, 8, word_ngrams=()).count()
 
     # narrow JVM trainer baseline (DIM=16, the registered configuration)
     t0 = time.perf_counter()
@@ -63,12 +68,16 @@ def main() -> None:
 
     for dim in (16, 256, 1024, 4096):
         t0 = time.perf_counter()
-        feats = langid_wide.wide_features(docs, dim=dim).persist()
+        feats = langid_union.union_features(
+            docs, dim, word_ngrams=()
+        ).persist()
         feats.count()
         feat_sec = time.perf_counter() - t0
         feats.unpersist()
         t0 = time.perf_counter()
-        rows, w = langid_wide.wide_train_trace(docs, iters=3, dim=dim)
+        rows, w = langid_union.union_train_trace(
+            docs, iters=3, dim=dim, word_ngrams=()
+        )
         total_sec = time.perf_counter() - t0
         results["wide"].append(
             {

@@ -80,7 +80,7 @@ EXECUTES_ON_BUILD = {
     "weight literals, ADVICE r8 #4) on build; cost in bench.py, "
     "correctness oracle-gated",
     # round-10
-    "langid_scores_wide": "trains the wide vector model (per-partition "
+    "langid_scores_wide": "trains the sparse vector model (per-partition "
     "partial-sum collects, bounded by model size) on build",
 }
 # (queries with "stream" in the name are skipped generically below)

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import md5_long
 from ..functions.text import distinct_word_shingles_arrow, tokenize_ws
-from ..session import stage_checkpoint
+from ..session import shuffle_width, stage_checkpoint
 
 MINHASH_K = 12  # 4 bands x 3 rows
 LSH_BANDS = 4
@@ -56,16 +56,6 @@ def _distinct_tokens(col: str = "text") -> Column:
 
 
 
-def _n_parts(df) -> int:
-    """Partition count for explicit repartitions: the session's shuffle
-    parallelism (AQE coalesces any excess). Hardcoding a constant would
-    under-parallelize a real cluster."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return 32
-
-
 def _shingle_rows(documents: DataFrame, n: int = 3, n_parts: int | None = None) -> DataFrame:
     """(doc_id, n_sh, s): one row per distinct shingle per doc.
 
@@ -81,7 +71,7 @@ def _shingle_rows(documents: DataFrame, n: int = 3, n_parts: int | None = None) 
       arrays, and a filter would be pushed below the projection, computing
       the whole shingle array a second time just to test its size.
     """
-    sh = documents.repartition(n_parts or _n_parts(documents)).select(
+    sh = documents.repartition(n_parts or shuffle_width(documents.sparkSession)).select(
         "doc_id",
         distinct_word_shingles_arrow(n)(F.col("text")).alias("sh"),
     )
@@ -202,7 +192,7 @@ def minhash_lsh_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    tsets = documents.repartition(_n_parts(documents)).select(
+    tsets = documents.repartition(shuffle_width(documents.sparkSession)).select(
         "doc_id",
         F.array_sort(distinct_word_shingles_arrow()(F.col("text"))).alias(
             "toks"
@@ -273,7 +263,7 @@ def dedup_incremental(
         .select("batch_doc", "corpus_doc")
         .distinct()
     )
-    tsets = documents.repartition(_n_parts(documents)).select(
+    tsets = documents.repartition(shuffle_width(documents.sparkSession)).select(
         "doc_id",
         F.array_sort(distinct_word_shingles_arrow()(F.col("text"))).alias(
             "toks"
@@ -359,7 +349,7 @@ def ingest_batch(
     # REBALANCE hint (guide §6: compact on write) lets AQE size the
     # written files to the advisory partition size -- one file for a
     # small batch, 100 TB batches get batch_bytes/advisory files.
-    n_compute = min(_n_parts(batch_docs), 32)
+    n_compute = min(shuffle_width(batch_docs.sparkSession), 32)
     (
         batch_docs.repartition(n_compute)
         .select(

@@ -229,14 +229,13 @@ class _BitReader:
         self._seek(end)
         return vals
 
-    def read_rice_vec(self, count: int, p: int, nxt_cache: dict):
+    def read_rice_vec(self, count: int, p: int):
         """``count`` Rice(p) codes as one unzigzagged int64 array (None
         on truncation or the unary bomb guard) -- the bulk twin of
         count x (read_unary, read(p), _unzigzag). Terminator positions
         are found by a vectorized pointer-doubling chase over a window
-        of the payload's 1-bit index (``nxt_cache`` is retained in the
-        signature but unused -- the windowed table is cheaper to build
-        per call than a payload-global table is to build once)."""
+        of the payload's 1-bit index (the windowed table is cheaper to
+        build per call than a payload-global table is to build once)."""
         import numpy as np
 
         if count <= 0:
@@ -638,15 +637,13 @@ def _decode_flac(payload):
     if channels < 1 or channels > 8 or bps != 16 or rate <= 0:
         return None  # the 16-bit boundary, like decode_wav
     chans: list = [[] for _ in range(channels)]
-    # The unpacked bit view and the per-p Rice terminator tables depend
-    # only on the payload bytes, so they are computed ONCE and shared by
-    # every frame (ADVICE r13 #1: without this, each frame re-ran
-    # np.unpackbits over the whole payload and rebuilt the tables,
+    # The unpacked bit view depends only on the payload bytes, so it is
+    # computed ONCE and shared by every frame (ADVICE r13 #1: without
+    # this, each frame re-ran np.unpackbits over the whole payload,
     # making multi-frame decode quadratic in stream length).
     unpacked = (
         _unpack_payload(payload) if total and pos + 2 <= n else None
     )
-    rice_cache: dict = {}
     while pos + 2 <= n and len(chans[0]) < total:
         got = _decode_frame(
             payload,
@@ -655,7 +652,6 @@ def _decode_flac(payload):
             total - len(chans[0]),
             channels,
             unpacked=unpacked,
-            rice_cache=rice_cache,
         )
         if got is None:
             return None
@@ -751,7 +747,6 @@ def _decode_frame(
     remaining: int,
     n_channels: int = 1,
     unpacked=None,
-    rice_cache: dict | None = None,
 ):
     """One frame -> (list of per-channel sample sequences, next_pos).
     Channel assignments (round 11 stereo): 0-7 independent channels,
@@ -793,12 +788,11 @@ def _decode_frame(
         return None
     vector = True
     r = _BitReader(payload, sub_off, unpacked=unpacked)
-    nxt_cache = rice_cache if rice_cache is not None else {}
     try:
         subs = []
         for i in range(n_sub):
             bps = 16 + (1 if kinds and kinds[i] == "side" else 0)
-            sub = _decode_subframe_np(r, bs, bps, nxt_cache)
+            sub = _decode_subframe_np(r, bs, bps)
             if sub is None:
                 return None
             subs.append(sub)
@@ -889,7 +883,7 @@ def _reconstruct_fixed(warm, res, order: int, wasted: int):
     return np.concatenate([np.asarray(warm, dtype=np.int64), arr])
 
 
-def _decode_subframe_np(r: _BitReader, bs: int, bps: int, nxt_cache: dict):
+def _decode_subframe_np(r: _BitReader, bs: int, bps: int):
     """Vectorized subframe decode: same field-by-field validity rules
     as the scalar path (every None condition mirrors it), bulk numpy
     reads for warmup/verbatim/residuals, cumsum reconstruction for the
@@ -931,7 +925,7 @@ def _decode_subframe_np(r: _BitReader, bs: int, bps: int, nxt_cache: dict):
         if warm is None:
             return None
         warm = _sign_vec(warm, width)
-        res = _decode_residual_np(r, bs, order, nxt_cache)
+        res = _decode_residual_np(r, bs, order)
         if res is None:
             return None
         return _reconstruct_fixed(warm, res, order, wasted) << wasted
@@ -954,7 +948,7 @@ def _decode_subframe_np(r: _BitReader, bs: int, bps: int, nxt_cache: dict):
         if coefs_u is None:
             return None
         coefs = [int(c) for c in _sign_vec(coefs_u, prec)]
-        res = _decode_residual_np(r, bs, order, nxt_cache)
+        res = _decode_residual_np(r, bs, order)
         if res is None:
             return None
         # (sum c_j * y) >> shift == sum (c_j >> shift) * y exactly iff
@@ -969,7 +963,7 @@ def _decode_subframe_np(r: _BitReader, bs: int, bps: int, nxt_cache: dict):
     return None
 
 
-def _decode_residual_np(r: _BitReader, bs: int, order: int, nxt_cache: dict):
+def _decode_residual_np(r: _BitReader, bs: int, order: int):
     """Vectorized twin of _decode_residual_scalar: same partition walk
     and validity rules, bulk reads per partition."""
     import numpy as np
@@ -1005,7 +999,7 @@ def _decode_residual_np(r: _BitReader, bs: int, order: int, nxt_cache: dict):
             else:
                 vals = np.zeros(count, dtype=np.int64)
         else:
-            vals = r.read_rice_vec(count, p, nxt_cache)
+            vals = r.read_rice_vec(count, p)
             if vals is None:
                 return None
         chunks.append(vals)

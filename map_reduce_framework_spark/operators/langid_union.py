@@ -1,40 +1,42 @@
-"""fastText-regime language-ID: word-n-gram + char-n-gram UNION
-features over a SPARSE vector pipeline at DIM=65536 (VERDICT r10 ask
-#6).
+"""Vector-shaped language-ID: char-n-gram (+ optional word-n-gram)
+features over a SPARSE vector pipeline (VERDICT r9 ask #4, r10 ask #6).
 
-langid_wide.py proved the vector-shaped trainer flat in DIM to 4096 --
-but its feature relation is DENSE (one array<bigint> of length DIM+1
-per doc), which is the wrong shape from DIM~10^4 up: a 65537-wide
-dense row is half a megabyte of mostly zeros, and fastText's
-production regime (64k-2M buckets, word n-grams + char n-grams) has
-per-doc support of only a few thousand features. This module is the
-SPARSE re-expression:
+The registered narrow langid operators (operators/langid.py)
+materialize the hashed-char-3-gram features as DIM+1 *named columns*
+and train all classes in one scalar aggregate -- the right shape at
+DIM=16, where the DuckDB oracle can replay the training trajectory as
+unrolled CTEs, and the wrong shape at fastText scale (DIM 64k-2M,
+word n-grams + char n-grams, per-doc support of only a few thousand
+features). This module re-expresses the SAME quantized trainer with
+plumbing whose cost is nnz-bound, independent of DIM:
 
 * features are TWO aligned arrays (idx array<bigint>, val
   array<bigint>) -- the nonzero buckets only. Char n-grams hash with
-  the EXACT narrow/wide bucket rule (md5('lid:'||gram)), so with
-  word_ngrams=() the union features equal langid_wide.wide_features
-  bucket-for-bucket -- the cross-implementation pin. Word n-grams
-  hash namespaced strings ('w1:tok', 'w2:tok tok'); all families
-  share one quantization: xq = floor((cnt/total)*1e6+0.5) over the
-  TOTAL feature count, bias _S at index dim.
+  the EXACT narrow bucket rule (md5('lid:'||gram)), so with
+  word_ngrams=() and DIM=16 the trainer reproduces the JVM trainer's
+  trace under the index map (narrow: bias at 0, bucket b at b+1;
+  here: bucket b at b, bias at dim). Word n-grams hash namespaced
+  strings ('w1:tok', 'w2:tok tok'); all families share one
+  quantization: xq = floor((cnt/total)*1e6+0.5) over the TOTAL
+  feature count, bias _S at index dim.
 * each training iteration is one mapInPandas pass: per chunk the dot
   products are ONE np.add.reduceat over the flattened (idx, val)
   arrays and the gradient is ONE np.add.at scatter -- cost is
-  nnz-bound, independent of DIM (the sparse scale claim
-  experiments/langid_union_scale.json measures: per-iteration wall
-  FLAT from DIM=4096 to DIM=1048576). Exactness discipline is ADVICE
-  r10 #2's: per-term |(pq-y)*xq| <= 1e12, accumulation flushed every
-  _FLUSH_ROWS rows so int64 partials are provably < 4e18 < 2^63;
-  nonlinearities go through CPython libm row-at-a-time so the
-  quantized trajectory is reproducible bit-for-bit by the
-  independent pure-Python twin (tests/test_round11_ops.py pins it).
+  nnz-bound, independent of DIM (experiments/langid_union_scale.json:
+  per-iteration wall FLAT from DIM=4096 to DIM=1048576). Exactness
+  discipline is ADVICE r10 #2's: per-term |(pq-y)*xq| <= 1e12,
+  accumulation flushed every _FLUSH_ROWS rows so int64 partials are
+  provably < 4e18 < 2^63; nonlinearities go through CPython libm
+  row-at-a-time so the quantized trajectory is reproducible
+  bit-for-bit by independent pure-Python twins
+  (tests/test_round10_ops.py, tests/test_round11_ops.py).
 
-Registered surface: ``langid_scores_wide_union`` (DIM=65536, char-3 +
-word-1 + word-2 features) -- rows-only by design, same argument as
-langid_scores_wide; correctness carried by the independent-Python pin
-plus the char-only DIM=16 equality to the dense trainer (itself
-pinned to the hash-exact narrow JVM trainer).
+Registered surfaces, both rows-only by design (the unrolled-CTE
+oracle at these widths would be megabytes of SQL):
+
+* ``langid_scores_wide`` -- char-3 features at DIM=WIDE_DIM (256);
+* ``langid_scores_wide_union`` -- char-3 + word-1 + word-2 features
+  at DIM=UNION_DIM (65536).
 
 Why the union matters (measured, experiments/langid_union_scale.json):
 on a confusable-pair corpus -- two languages built from the SAME word
@@ -62,18 +64,47 @@ from pyspark.sql.types import (
 )
 
 from .langid import LID_ITERS, LID_LANGS, LID_LR, LID_SEED, _S
-from .langid_wide import _FLUSH_ROWS, _MM_CHUNK, _nll_q, _pq_from_dot
+
+#: The registered char-only configuration (``langid_scores_wide``) --
+#: 16x the oracle-exact DIM=16 narrow trainer, well out of the
+#: collision-starved regime the capacity ladder mapped (accuracy
+#: saturates at 1.0 from DIM=8 on the planted corpus).
+WIDE_DIM = 256
 
 #: The registered fastText-regime configuration.
 UNION_DIM = 65536
 UNION_WORD_NGRAMS = (1, 2)
 
+#: Rows per int64 chunk: chunk partial <= _MM_CHUNK * 1e12 ~ 6.6e16,
+#: three orders of magnitude under 2^63 -- the chunk arithmetic is
+#: exact, overflow structurally impossible (ADVICE r10 #2).
+_MM_CHUNK = 65536
+
+#: Rows per emitted partial row-group: every LongType gradient value
+#: leaving the executor is < _FLUSH_ROWS * 1e12 = 4e18 < 2^63, so a
+#: partition of ANY size stays exact -- it just emits more groups.
+_FLUSH_ROWS = 4_000_000
+
+
+def _pq_from_dot(dot: int) -> int:
+    """Quantized sigmoid under integer weights -- the narrow trainer's
+    exact rule (z = dot/1e12 in double, pq = floor(1e6/(1+exp(-z)) +
+    0.5)), evaluated by CPython libm."""
+    z = float(dot) / 1.0e12
+    return math.floor(float(_S) / (1.0 + math.exp(-z)) + 0.5)
+
+
+def _nll_q(pq: int, is_y: bool) -> int:
+    """Quantized per-row NLL -- the narrow trainer's rule verbatim."""
+    pc = float(min(max(pq, 1), _S - 1)) / 1.0e6
+    return math.floor(-math.log(pc if is_y else 1.0 - pc) * 1.0e6 + 0.5)
+
 
 def _bucket(feat: str, dim: int) -> int:
     """The shared bucket rule (langid._lid_features verbatim): first
     15 hex chars of md5('lid:'||feat) as an integer, mod dim. Char
-    grams pass through RAW (identical buckets to the narrow/wide
-    paths); word n-grams arrive namespaced ('w{n}:...')."""
+    grams pass through RAW (identical buckets to the narrow path);
+    word n-grams arrive namespaced ('w{n}:...')."""
     return int(
         hashlib.md5(f"{LID_SEED}:{feat}".encode()).hexdigest()[:15], 16
     ) % dim
@@ -179,7 +210,7 @@ def union_train_trace(
     word_ngrams: tuple = UNION_WORD_NGRAMS,
 ) -> tuple[list, dict]:
     """The quantized one-vs-rest trainer over SPARSE features: same
-    trajectory semantics as langid_wide.wide_train_trace (pinned equal
+    trajectory semantics as langid.langid_train_trace (pinned equal
     at DIM=16 with word_ngrams=()), with nnz-bound per-iteration cost.
     Per chunk: flatten (idx, val), dots = np.add.reduceat, gradient =
     np.add.at scatter of np.repeat(pq - y, nnz) * val -- both exact
@@ -334,9 +365,10 @@ def langid_scores_wide_union(
     _trained=None,
 ) -> DataFrame:
     """(doc_id, labeled_lang, pred_lang, confidence, margin_q6) under
-    the union model at fastText width -- langid_scores_wide's exact
-    output contract, scored sparsely (per-doc cost = support size).
-    Registered rows-only (module doc)."""
+    the sparse model -- langid.langid_scores' exact output contract
+    (argmax with lexicographic tie-break, quantized confidence,
+    winner-minus-runner-up margin), scored sparsely (per-doc cost =
+    support size). Registered rows-only (module doc)."""
     import numpy as np
 
     _rows, w = _trained or union_train_trace(
@@ -404,8 +436,10 @@ def langid_scores_wide_union(
     )
 
 
-#: Per-process memo of trained union models (the _WIDE_CACHE pattern,
-#: keyed on the table fingerprint so regenerated tables retrain).
+#: Per-process memo of trained models: (sf_dir, parquet fingerprint,
+#: iters, lr, dim, word_ngrams) under a weakly-referenced session --
+#: bench reps and sweep double-runs train once, regenerated tables
+#: retrain.
 import weakref
 
 _UNION_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -417,13 +451,16 @@ def union_trained_for_table(
     iters: int = LID_ITERS,
     lr: float = LID_LR,
     dim: int = UNION_DIM,
+    word_ngrams: tuple = UNION_WORD_NGRAMS,
 ):
     from ..sources.io import load_table
     from .langid import _table_fingerprint
 
     per = _UNION_CACHE.setdefault(spark, {})
-    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr, dim)
+    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr, dim, word_ngrams)
     if key not in per:
         docs = load_table(spark, sf_dir, "documents")
-        per[key] = union_train_trace(docs, iters, lr, dim=dim)
+        per[key] = union_train_trace(
+            docs, iters, lr, dim=dim, word_ngrams=word_ngrams
+        )
     return per[key]

@@ -2302,7 +2302,7 @@ def multimodal_dedup_agreement(documents: DataFrame) -> DataFrame:
     each contribute unique recall. Each pair relation is its
     registered banded plan unchanged, computed ONCE (stage-
     checkpointed) and reused across its three matrix cells."""
-    from ..session import stage_checkpoint
+    from ..session import run_concurrently, stage_checkpoint
     from .audio import audio_fingerprint_pairs
     from .dedup import minhash_lsh_pairs
 
@@ -2317,21 +2317,16 @@ def multimodal_dedup_agreement(documents: DataFrame) -> DataFrame:
     # driver thread pool (guide §2.6); each relation is deterministic,
     # so scheduling order cannot change a row (r13; same pattern as
     # ann_recall_report, measured there 12.9 -> 8.4 s)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            (
-                name,
-                pool.submit(
-                    stage_checkpoint,
-                    df.select("doc_a", "doc_b"),
-                    eager=True,
-                ),
-            )
-            for name, df in methods
-        ]
-        rels = [(name, f.result()) for name, f in futs]
+    materialized = run_concurrently(
+        (
+            name,
+            lambda df=df: stage_checkpoint(
+                df.select("doc_a", "doc_b"), eager=True
+            ),
+        )
+        for name, df in methods
+    )
+    rels = [(name, rel) for (name, _), rel in zip(methods, materialized)]
     out = None
     for i in range(len(rels)):
         for j in range(i + 1, len(rels)):
@@ -3312,16 +3307,6 @@ def _wav_fmt_tag_offset(payload) -> int:
                 raise ValueError("truncated fmt chunk")
             return b
     raise ValueError("no fmt chunk")
-
-
-def wav_format_tag(payload) -> int | None:
-    """WAVE format tag (1 = PCM, 3 = IEEE float, 0x55 = MP3, ...) --
-    header walk only; None when not a RIFF/WAVE stream."""
-    try:
-        off = _wav_fmt_tag_offset(payload)
-    except ValueError:
-        return None
-    return int.from_bytes(payload[off : off + 2], "little")
 
 
 def wav_fmt_fields(payload) -> tuple | None:

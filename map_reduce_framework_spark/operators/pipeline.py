@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.text import tokenize_ws
-from ..session import stage_checkpoint
+from ..session import shuffle_width, stage_checkpoint
 from . import dedup, text_analysis
 
 
@@ -739,10 +739,7 @@ def assign_doc_ids_scalable(documents: DataFrame) -> DataFrame:
     its oracle. The materialization (localCheckpoint) pins one boundary
     sample + partition assignment across the two passes."""
     spark = documents.sparkSession
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = 32
+    n = shuffle_width(spark)
     keyed = (
         documents.select("doc_id", F.md5("text").alias("k"))
         .repartitionByRange(n, "k", "doc_id")

@@ -50,23 +50,13 @@ from pyspark.sql.types import ArrayType, LongType
 from pyspark.sql.window import Window
 
 from ..functions.vector import as_double, dot
-from ..session import stage_checkpoint
+from ..session import run_concurrently, shuffle_width, stage_checkpoint
 
 DIM = 64
 N_TABLES = 6
 PLANES_PER_TABLE = 4
 
 
-
-
-def _n_parts(df) -> int:
-    """Partition count for explicit repartitions: the session's shuffle
-    parallelism (AQE coalesces any excess). Hardcoding a constant would
-    under-parallelize a real cluster."""
-    try:
-        return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return 32
 
 
 def _normed(embeddings: DataFrame, n_parts: int | None = None) -> DataFrame:
@@ -83,7 +73,7 @@ def _normed(embeddings: DataFrame, n_parts: int | None = None) -> DataFrame:
       doing the O(n^2/2) work."""
     v = as_double(F.col("embedding"))
     return (
-        embeddings.repartition(n_parts or _n_parts(embeddings))
+        embeddings.repartition(n_parts or shuffle_width(embeddings.sparkSession))
         .select("vec_id", v.alias("v"), F.sqrt(dot(v, v)).alias("nrm"))
     )
 
@@ -177,7 +167,7 @@ def lsh_buckets(embeddings: DataFrame) -> DataFrame:
     one row per vector per hash table. Narrow (no shuffle beyond the scan
     repartition); bucket hashing is Arrow-vectorized."""
     return (
-        embeddings.repartition(_n_parts(embeddings))
+        embeddings.repartition(shuffle_width(embeddings.sparkSession))
         .select(
             "vec_id",
             F.posexplode(_bucket_ids_all_tables(F.col("embedding"))).alias(
@@ -518,12 +508,8 @@ def ann_recall_report(
     # is its rnk <= k' prefix (same ordering), so the O(n) scan runs once.
     # The branches are INDEPENDENT small jobs that each leave most of
     # the cluster idle, so they are built and materialized from a small
-    # thread pool (guide §2.6: overlap independent jobs -- actions are
-    # only sequential because driver code calls them sequentially);
-    # every branch is deterministic, so scheduling order cannot change
-    # a row.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # thread pool (session.run_concurrently); every branch is
+    # deterministic, so scheduling order cannot change a row.
     def _exact():
         return stage_checkpoint(
             knn_brute_force(emb, n_queries=n_queries, k=max_k).select(
@@ -535,16 +521,15 @@ def ann_recall_report(
     def _branch(build):
         return stage_checkpoint(build().select("q_id", "vec_id"), eager=True)
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fut_exact = pool.submit(_exact)
-        futs = [
-            (name, pool.submit(_branch, build), k)
-            for name, build, k in variant_defs
+    exact_all, *branch_dfs = run_concurrently(
+        [("exact", _exact)]
+        + [
+            (name, lambda build=build: _branch(build))
+            for name, build, _ in variant_defs
         ]
-        exact_all = fut_exact.result()
-        picks = [(name, f.result(), k) for name, f, k in futs]
+    )
     out = None
-    for name, df, k in picks:
+    for (name, _, k), df in zip(variant_defs, branch_dfs):
         exact = exact_all.filter(F.col("rnk") <= k).select("q_id", "vec_id")
         hits = df.join(exact, ["q_id", "vec_id"], "left_semi")
         rep = hits.agg(F.count("*").alias("n_hits")).select(

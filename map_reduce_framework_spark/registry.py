@@ -1352,30 +1352,28 @@ def q_langid_stratified_sample(spark, sf_dir):
     )
 
 
-# Wide-DIM twin (round 10, VERDICT r9 ask #4): the fastText-regime
-# vector-shaped trainer at DIM=256. Rows-only BY DESIGN: the unrolled
-# training-trajectory oracle at this width would be megabytes of SQL;
-# correctness is carried by (a) the bit-for-bit independent-Python pin
-# and (b) DIM=16 equality against the hash-exact JVM trainer
-# (tests/test_round10_ops.py::TestWideLangid).
-from .operators import langid_wide  # noqa: E402
+# Vector-shaped langid (round 10-11, VERDICT r9 ask #4 / r10 ask #6):
+# one SPARSE trainer (nnz-bound, DIM-independent cost) serves both
+# registered widths -- char-3 grams at WIDE_DIM=256, and char-3 +
+# word-1/word-2 grams at 65536. Rows-only BY DESIGN: the unrolled
+# training-trajectory oracle at these widths would be megabytes of
+# SQL; correctness is carried by bit-for-bit independent-Python pins
+# and by DIM=16 equality against the hash-exact JVM trainer
+# (tests/test_round10_ops.py::TestWideLangid,
+# tests/test_round11_ops.py::TestUnionLangid).
+from .operators import langid_union  # noqa: E402
 
 
 @register("langid_scores_wide", None)
 def q_langid_scores_wide(spark, sf_dir):
-    return langid_wide.langid_scores_wide(
+    return langid_union.langid_scores_wide_union(
         _t(spark, sf_dir, "documents"),
-        _trained=langid_wide.wide_trained_for_table(spark, sf_dir),
+        dim=langid_union.WIDE_DIM,
+        word_ngrams=(),
+        _trained=langid_union.union_trained_for_table(
+            spark, sf_dir, dim=langid_union.WIDE_DIM, word_ngrams=()
+        ),
     )
-
-
-# fastText-regime union features (round 11, VERDICT r10 ask #6):
-# char-3 + word-1/word-2 grams hashed into 65536 buckets over the
-# SPARSE vector pipeline (nnz-bound, DIM-independent cost). Rows-only
-# by the same argument as langid_scores_wide; correctness carried by
-# the independent-Python pin plus char-only DIM=16 equality to the
-# dense trainer (tests/test_round11_ops.py::TestUnionLangid).
-from .operators import langid_union  # noqa: E402
 
 
 @register("langid_scores_wide_union", None)

@@ -71,6 +71,13 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle parallelism -- the partition count for
+    explicit repartitions (AQE coalesces any excess). Hardcoding a
+    constant would under-parallelize a real cluster."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def stage_checkpoint(df, *, eager: bool = False):
     """Lineage-truncating stage boundary for iterative / multi-stage
     operators (k-core peeling rounds, PageRank's edge relation, the
@@ -105,6 +112,30 @@ def stage_checkpoint(df, *, eager: bool = False):
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def run_concurrently(thunks) -> list:
+    """Run independent driver-side branches -- ``(name, thunk)`` pairs,
+    typically eager materializations that each leave most of the
+    cluster idle -- from a 4-thread pool and return their results in
+    order (Spark actions are only sequential because driver code calls
+    them sequentially). On the first failure the branches that
+    have not started are cancelled, and the error is re-raised with a
+    note naming the failed branch; branches already running finish
+    before this returns."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+    thunks = list(thunks)
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futs = [pool.submit(thunk) for _, thunk in thunks]
+        done, _ = wait(futs, return_when=FIRST_EXCEPTION)
+        for (name, _), fut in zip(thunks, futs):
+            if fut in done and fut.exception() is not None:
+                pool.shutdown(wait=False, cancel_futures=True)
+                err = fut.exception()
+                err.add_note(f"in concurrent branch {name!r}")
+                raise err
+        return [fut.result() for fut in futs]
 
 
 def normalize_runtime_conf(spark: SparkSession) -> SparkSession:

@@ -105,115 +105,3 @@ def sessionize_stream(events: DataFrame) -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithState twin (Spark 4.x successor API): the same
-# sessionization semantics through a StatefulProcessor with typed
-# ValueState. Spark manages state encoding/eviction through the handle
-# (RocksDB-backed); the emission contract is identical to
-# sessionize_stream, so the two share one parity test against the batch
-# window query. transformWithState requires the RocksDB state-store
-# provider -- callers set it BEFORE the stream starts (the provider is
-# frozen into the checkpoint).
-# ---------------------------------------------------------------------------
-
-try:  # Spark >= 4.0
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - older runtimes
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = object  # type: ignore[assignment,misc]
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-def transform_with_state_runnable() -> bool:
-    """transformWithState's driver-side state server speaks protobuf
-    between the JVM and a dedicated Python worker; this container ships
-    no `google.protobuf` (and installing packages is out of scope), so
-    the operator is implemented + unit-shaped but cannot EXECUTE here.
-    The parity test skips with this probe; on a normal cluster image
-    (protobuf is a standard pyspark[connect] dependency) it runs. The
-    applyInPandasWithState sessionizer above is the executable
-    stateful path in this environment."""
-    if not HAS_TRANSFORM_WITH_STATE:
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-class SessionProcessor(StatefulProcessor):
-    """Per-user session stitching as a typed StatefulProcessor: state is
-    a single ValueState row (last_us, n_sessions, n_events); each
-    micro-batch folds its rows in event-time order and emits one
-    progress row -- the same contract as ``_sessionize_group``."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._st = handle.getValueState("sess", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (user_id,) = key
-        last_us, n_sessions, n_events = (
-            self._st.get() if self._st.exists() else (None, 0, 0)
-        )
-        saw_rows = False
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            saw_rows = True
-            ts_us = (
-                pd.to_datetime(pdf["ts"])
-                .astype("datetime64[us]")
-                .astype("int64")
-            ).sort_values()
-            for us in ts_us:
-                us = int(us)
-                if (
-                    last_us is None
-                    or us - last_us > SESSION_GAP_SECONDS * 1_000_000
-                ):
-                    n_sessions += 1
-                last_us = us
-                n_events += 1
-        if saw_rows:
-            self._st.update((last_us, n_sessions, n_events))
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_sessions": [n_sessions],
-                    "n_events": [n_events],
-                    "last_ts": [pd.Timestamp(last_us, unit="us")],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stream_tws(events: DataFrame) -> DataFrame:
-    """``sessionize_stream`` through transformWithStateInPandas. The
-    session must run the RocksDB state-store provider
-    (``ROCKSDB_PROVIDER``) -- transformWithState rejects the default
-    HDFS-backed provider."""
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )

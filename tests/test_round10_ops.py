@@ -565,9 +565,11 @@ class TestCrossEpochDedup:
 
 
 def _independent_wide_trace(rows, dim, iters, lr):
-    """From-scratch pure-Python twin of wide_train_trace: dict-based
-    counting, Python-int gradients, math.exp/math.log -- shares NO code
-    with the engine path (the BPE bit-for-bit pin pattern)."""
+    """From-scratch pure-Python twin of the char-only vector trainer
+    (langid_union.union_train_trace with word_ngrams=()), in the narrow
+    trainer's layout (bias at 0, bucket b at b+1): dict-based counting,
+    Python-int gradients, math.exp/math.log -- shares NO code with the
+    engine path (the BPE bit-for-bit pin pattern)."""
     import hashlib
     import math
 
@@ -623,15 +625,36 @@ def _independent_wide_trace(rows, dim, iters, lr):
     return trace, w
 
 
+def _union_trace_in_wide_layout(docs, iters, lr, dim):
+    """The char-only sparse trainer's trajectory in the narrow trainer's
+    trace shape: rows (t, lang, avg_loss, *weights after t) with the
+    weights mapped bias dim -> 0, bucket b -> b+1. The sparse trace
+    carries losses only, so the weights after iteration t come from a
+    t-iteration run (training is deterministic)."""
+    from map_reduce_framework_spark.operators import langid_union as LU
+
+    def wide(w):
+        return {l: [v[dim]] + list(v[:dim]) for l, v in w.items()}
+
+    rows, w = [], {}
+    for t in range(1, iters + 1):
+        loss_rows, w = LU.union_train_trace(
+            docs, t, lr, dim=dim, word_ngrams=()
+        )
+        ww = wide(w)
+        rows += [
+            (*r, *[float(v) / 1e6 for v in ww[r[1]]])
+            for r in loss_rows
+            if r[0] == t
+        ]
+    return rows, wide(w)
+
+
 class TestWideLangid:
     def test_bit_for_bit_vs_independent_python_twin(self, spark, sf_smoke):
-        from map_reduce_framework_spark.operators import langid_wide as LW
-
         docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
         dim, iters, lr = 32, 3, 4.0
-        eng_rows, eng_w = LW.wide_train_trace(
-            docs, iters, lr, dim=dim
-        )
+        eng_rows, eng_w = _union_trace_in_wide_layout(docs, iters, lr, dim)
         raw = [
             (r["doc_id"], r["lang"], r["text"])
             for r in docs.select("doc_id", "lang", "text").collect()
@@ -641,18 +664,19 @@ class TestWideLangid:
         assert eng_rows == ind_rows
 
     def test_dim16_equals_jvm_trainer_trace(self, spark, sf_smoke):
-        """At DIM=16 the wide vector path reproduces the hash-exact JVM
-        trainer's committed trace bit-for-bit -- quantization, sigmoid,
-        NLL, and update rule are the same math in two runtimes."""
-        from map_reduce_framework_spark.operators import langid, langid_wide
+        """At DIM=16 the char-only sparse vector path reproduces the
+        hash-exact JVM trainer's committed trace bit-for-bit --
+        quantization, sigmoid, NLL, and update rule are the same math
+        in two runtimes."""
+        from map_reduce_framework_spark.operators import langid
 
         docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-        wide_rows, wide_w = langid_wide.wide_train_trace(
-            docs, langid.LID_ITERS, langid.LID_LR, dim=16
+        vec_rows, vec_w = _union_trace_in_wide_layout(
+            docs, langid.LID_ITERS, langid.LID_LR, 16
         )
         jvm_rows, jvm_w = langid._trace_for_table(spark, sf_smoke)
-        assert wide_w == jvm_w
-        assert wide_rows == jvm_rows
+        assert vec_w == jvm_w
+        assert vec_rows == jvm_rows
 
     def test_registered_scores_contract(self, spark, sf_smoke):
         from map_reduce_framework_spark.registry import REGISTRY

@@ -30,7 +30,7 @@ class TestFlacMultiFrameShared:
 
         rng = np.random.default_rng(11)
         # > 4096 samples -> several frames; exercises the shared
-        # unpacked/rice_cache path of _decode_flac (ADVICE r13 #1)
+        # unpacked bit view of _decode_flac (ADVICE r13 #1)
         for n in (4097, 12_288, 40_000):
             clip = [int(v) for v in rng.integers(-3000, 3000, n)]
             for payload in (
@@ -264,14 +264,27 @@ class TestFanOutGate:
 
     def test_elides_exchange_for_wide_input(self, spark):
         from map_reduce_framework_spark.operators.text_analysis import (
-            _default_parallelism,
             _fan_out,
         )
+        from map_reduce_framework_spark.session import shuffle_width
 
-        target = _default_parallelism(spark.range(1))
+        target = shuffle_width(spark)
         df = spark.range(10_000).repartition(target * 2)
         out = _fan_out(df)
         assert out is df  # no extra exchange on top
+
+    def test_keeps_exchange_for_streaming_input(self, spark, sf_smoke):
+        from map_reduce_framework_spark.operators.text_analysis import (
+            _fan_out,
+        )
+        from map_reduce_framework_spark.streaming.ops import (
+            read_events_stream,
+        )
+
+        df = read_events_stream(spark, sf_smoke)
+        out = _fan_out(df)
+        assert out.isStreaming
+        assert "Repartition" in out._jdf.queryExecution().logical().toString()
 
     def test_results_identical_either_way(self, spark, sf_smoke):
         from map_reduce_framework_spark.operators.text_analysis import (
@@ -285,6 +298,44 @@ class TestFanOutGate:
         b = gopher_repetition_filter(wide)
         rows_wide = {tuple(r) for r in b.collect()}
         assert rows_narrow == rows_wide
+
+
+class TestRunConcurrently:
+    def test_results_in_submission_order(self):
+        from map_reduce_framework_spark.session import run_concurrently
+
+        assert run_concurrently(
+            (f"b{i}", lambda i=i: i * i) for i in range(10)
+        ) == [i * i for i in range(10)]
+
+    def test_failure_names_branch_and_cancels_unstarted(self):
+        import time
+
+        from map_reduce_framework_spark.session import run_concurrently
+
+        started = []
+
+        def boom():
+            raise ValueError("kaput")
+
+        def hold():
+            time.sleep(0.5)
+
+        def later(i):
+            started.append(i)
+            time.sleep(0.2)
+
+        # three branches hold their workers, the fourth fails; the 16
+        # queued branches behind them must be cancelled, except at most
+        # the one the failed branch's worker may pick up before the
+        # cancel lands
+        thunks = [("hold0", hold), ("hold1", hold), ("hold2", hold)]
+        thunks += [("boom", boom)]
+        thunks += [(f"later{i}", lambda i=i: later(i)) for i in range(16)]
+        with pytest.raises(ValueError, match="kaput") as info:
+            run_concurrently(thunks)
+        assert "in concurrent branch 'boom'" in info.value.__notes__
+        assert len(started) <= 1
 
 
 class TestGopherDocIdType:

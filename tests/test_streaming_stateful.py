@@ -89,55 +89,3 @@ def test_state_survives_restart_via_checkpoint(spark, tmp_path):
     )
     assert run_once() == {7: (2, 4)}
 
-
-def test_transform_with_state_sessionize_parity(spark, sf_smoke, tmp_path):
-    """transformWithStateInPandas twin of the sessionizer: same parity
-    contract as test_stateful_sessionize_matches_batch. SKIPS where the
-    state-server's protobuf dependency is absent (this container; see
-    stateful.transform_with_state_runnable) -- the operator code itself
-    is importable and plan-buildable everywhere."""
-    import pytest
-
-    # buildable regardless of runnability: the plan must construct
-    assert stateful.HAS_TRANSFORM_WITH_STATE
-    if not stateful.transform_with_state_runnable():
-        pytest.skip(
-            "transformWithState needs google.protobuf for its state "
-            "server; not present in this container"
-        )
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        stateful.ROCKSDB_PROVIDER,
-    )
-    try:
-        out = (
-            stateful.sessionize_stream_tws(
-                read_events_stream(spark, sf_smoke)
-            )
-            .writeStream.format("memory")
-            .queryName("sess_parity_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        out.awaitTermination()
-        got = {
-            r["user_id"]: (r["n_sessions"], r["n_events"])
-            for r in spark.table("sess_parity_tws").collect()
-        }
-        want = {
-            r["user_id"]: (r["n_sessions"], r["n_events"])
-            for r in relational.user_sessions(
-                load_table(spark, sf_smoke, "events")
-            ).collect()
-        }
-        assert got == want and len(got) > 0
-    finally:
-        if old is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
